@@ -8,7 +8,8 @@ routing (R1/R2), key extraction (R3), envelope serialization (F1) and
 the Kafka producer configs (K1); the checkpoint commits offsets only
 after the sink write returns (K3/O2 — a produce failure fails the
 micro-batch BEFORE the commit, so restart replays it). The per-batch
-tally/lag pattern mirrors streaming/job.py's process_batch.
+tally/lag is the same observed tally streaming/job.py's process_batch
+reads (operators/tally.py:observed_tally).
 Configuration is the same TOML shape the reference uses
 (config_toml.load_config).
 
@@ -20,7 +21,6 @@ but every operator it composes is oracle- or unit-tested there.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from outboxx_spark.config_toml import load_config
 from outboxx_spark.operators.keys import partition_key
 from outboxx_spark.operators.routing import route, streams_dim
+from outboxx_spark.operators.tally import observed_tally
 from outboxx_spark.sources.debezium import parse_debezium
 from outboxx_spark.streaming.http import ObservabilityServer
 from outboxx_spark.streaming.job import kafka_writer_options
@@ -82,41 +83,32 @@ def main() -> None:
 
     def process_batch(batch, epoch_id: int) -> None:
         routed = route(batch, streams)
-        out = routed.select(
-            F.col("destination").alias("topic"),
-            # R3: per-stream routing key out of the dynamic row image;
-            # null key fail-stops the batch (reference parity)
-            partition_key(
-                F.element_at(F.col("data"), F.col("routing_key"))
-            ).alias("key"),
-            F.col("value"),
-            F.col("stream"),
-            F.col("op"),
-            F.col("commit_ts"),
-        ).persist()
-        try:
-            (
-                out.select("topic", "key", "value")
-                .write.format("kafka")
-                .options(**kafka_writer_options(bootstrap))
-                .save()
-            )
-            # A1 tally + M4 lag AFTER the sink write, like the
-            # reference (metrics reflect delivered events)
-            rows = (
-                out.groupBy("stream", "op")
-                .agg(F.count("*").alias("n"), F.max("commit_ts").alias("head"))
-                .collect()
-            )
-            head = 0
-            for r in rows:
-                registry.add_processed(r["stream"], r["op"], r["n"])
-                head = max(head, r["head"] or 0)
-            if head:
-                registry.set_lag(time.time() - head / 1000.0)  # ts_ms
-            registry.mark_activity()
-        finally:
-            out.unpersist()
+        out, read_tally = observed_tally(
+            routed.select(
+                F.col("destination").alias("topic"),
+                # R3: per-stream routing key out of the dynamic row image;
+                # null key fail-stops the batch (reference parity)
+                partition_key(
+                    F.element_at(F.col("data"), F.col("routing_key"))
+                ).alias("key"),
+                F.col("value"),
+                F.col("stream"),
+                F.col("op"),
+                F.col("commit_ts"),
+            ),
+            config.streams,
+        )
+        (
+            out.select("topic", "key", "value")
+            .write.format("kafka")
+            .options(**kafka_writer_options(bootstrap))
+            .save()
+        )
+        # A1 tally + M4 lag AFTER the sink write, like the reference
+        # (metrics reflect delivered events); commit_ts is ts_ms here
+        counts, head = read_tally()
+        registry.record_batch(counts, head / 1000.0 if head else None)
+        registry.mark_activity()
 
     q = (
         enveloped.writeStream.foreachBatch(process_batch)

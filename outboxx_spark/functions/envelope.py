@@ -24,6 +24,8 @@ column *before* the routing fan-out join when N > 1.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -76,17 +78,31 @@ def serialize_feed(df: DataFrame, data_cols: list[str]) -> DataFrame:
     routing join afterwards fans the same serialized value out to N
     streams without re-serializing. Double columns get the non-finite
     hard-error guard.
+
+    The ``value`` expression depends only on the payload column names
+    and which of them are floating point, so it is built once per shape
+    and reused (``_envelope_value``): a micro-batch pays one
+    ``withColumn`` instead of rebuilding the expression tree over py4j.
     """
     types = dict(zip(df.schema.names, df.schema.fields))
-    cols = []
-    for c in data_cols:
-        f = types.get(c)
-        if f is not None and isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-            cols.append(_finite_guard(F.col(c), c).alias(c))
-        else:
-            cols.append(F.col(c).alias(c))
-    data = F.struct(*cols)
-    return df.withColumn(
-        "value",
-        envelope_json(F.col("op"), data, F.col("resource"), F.col("commit_ts"), F.col("lsn")),
+    floats = tuple(
+        c
+        for c in data_cols
+        if c in types and isinstance(types[c].dataType, (T.DoubleType, T.FloatType))
     )
+    return df.withColumn("value", _envelope_value(tuple(data_cols), floats))
+
+
+@lru_cache(maxsize=64)
+def _envelope_value(data_cols: tuple[str, ...], floats: tuple[str, ...]) -> Column:
+    """The envelope expression for one payload shape. A Column is an
+    unresolved expression held through the driver's py4j gateway, which
+    lives as long as the process, so a cached one stays valid across
+    sessions and ``SparkContext.stop()``."""
+    data = F.struct(
+        *[
+            (_finite_guard(F.col(c), c) if c in floats else F.col(c)).alias(c)
+            for c in data_cols
+        ]
+    )
+    return envelope_json(F.col("op"), data, F.col("resource"), F.col("commit_ts"), F.col("lsn"))

@@ -14,7 +14,7 @@ config size, because their costs cross over:
   config is a driver-side constant, so the whole match table is
   embedded in the plan as ONE folded map literal ``(resource + NUL +
   op) -> array<struct<stream, destination, routing_key>>`` and
-  fan-out is ``explode(map[key])`` — a codegen'd Generate with no
+  fan-out is ``inline(map[key])`` — a codegen'd Generate with no
   join, no broadcast exchange, and no per-plan ``createDataFrame``
   round trip. Caveat that sets the threshold: Catalyst evaluates
   ``GetMapValue`` on an ``ArrayBasedMapData`` literal by LINEAR key
@@ -41,6 +41,7 @@ Both shapes produce identical rows (pinned by
 from __future__ import annotations
 
 import json
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,14 +96,18 @@ def route_config(events: DataFrame, streams: list[StreamConfig]) -> DataFrame:
     n_entries = sum(len(s.operations) for s in streams)
     if n_entries > ROUTE_LITERAL_MAX_ENTRIES:
         return route(events, streams_dim(events.sparkSession, streams))
+    return events.select("*", _route_matches(tuple(streams)))
+
+
+@lru_cache(maxsize=64)
+def _route_matches(streams: tuple[StreamConfig, ...]) -> Column:
+    """The literal-map fan-out for one config: ``inline`` turns each
+    matched struct into the (stream, destination, routing_key) columns
+    directly. ``StreamConfig`` is frozen, so the config tuple is the
+    cache key and a micro-batch reuses the expression instead of
+    rebuilding it over py4j."""
     key = F.concat(F.col("resource"), F.lit(_KEY_SEP), F.lower(F.col("op")))
-    matches = F.explode(streams_route_map(streams)[key]).alias("_match")
-    return events.select("*", matches).select(
-        *events.columns,
-        F.col("_match.stream").alias("stream"),
-        F.col("_match.destination").alias("destination"),
-        F.col("_match.routing_key").alias("routing_key"),
-    )
+    return F.inline(streams_route_map(list(streams))[key])
 
 
 def streams_dim(spark: SparkSession, streams: list[StreamConfig]) -> DataFrame:

@@ -8,7 +8,7 @@ thing is one declarative plan:
     parquet scan (pruned)            -- S1 analog
       -> project feed columns        -- S8 converter
       -> to_json envelope            -- F1, serialize ONCE
-      -> explode(config map lookup)  -- R1/R2, fan-out, no join at all
+      -> inline(config map lookup)   -- R1/R2, fan-out, no join at all
       -> partition key               -- R3
       -> sink (per-destination)      -- K1
 

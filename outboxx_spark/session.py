@@ -21,7 +21,9 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "outboxx_spark", extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on, so an unset variable
+    # never oversubscribes the host
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -14,7 +14,8 @@ Reproduces the reference's orchestration (SURVEY §2.6/§3):
   'confirm LSN to Postgres only after Kafka flush' contract. Replays
   re-produce a suffix; consumers dedup on (resource, lsn) (O4).
 - O6 graceful shutdown: ``query.stop()``; checkpoint makes restart safe.
-- M1/M4: per-batch tally + lag into the MetricsRegistry.
+- M1/M4: per-batch tally + lag into the MetricsRegistry, observed on
+  the sink's own pass over the batch (``operators.tally.observed_tally``).
 
 Sink: partitioned parquet per destination here (the testbed has no
 Kafka broker); `df.write.format("kafka")` with the reference's producer
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 import os
 import time
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +36,7 @@ from outboxx_spark.fsutil import fs_exists
 from outboxx_spark.functions.envelope import serialize_feed
 from outboxx_spark.operators.keys import partition_key
 from outboxx_spark.operators.routing import route_config
+from outboxx_spark.operators.tally import observed_tally
 from outboxx_spark.pipeline import FEED_DATA_COLS
 from outboxx_spark.sources.feed import read_feed_stream
 from outboxx_spark.sources.snapshot import snapshot_table
@@ -75,7 +78,13 @@ def kafka_writer_options(
 def _dynamic_key(data_cols: list[str]) -> F.Column:
     """R3 with per-stream routing_key: the configured column name (a
     *value* in the routed row) selects the payload column. A literal
-    name->value map keeps this codegen'd; missing/null key fails fast."""
+    name->value map keeps this codegen'd; missing/null key fails fast.
+    Built once per payload shape (``_key_expr``), not per micro-batch."""
+    return _key_expr(tuple(data_cols))
+
+
+@lru_cache(maxsize=64)
+def _key_expr(data_cols: tuple[str, ...]) -> F.Column:
     kv = []
     for c in data_cols:
         kv += [F.lit(c), F.col(c).cast("string")]
@@ -134,8 +143,8 @@ def run_snapshot_phase(
 ) -> int:
     """Bootstrap: write READ events for every read-opted resource before
     streaming starts (O3). The write is the flush barrier — any failure
-    aborts the job before an offset is ever committed. Returns rows
-    written."""
+    aborts the job before an offset is ever committed. Returns the
+    number of tables written."""
     total = 0
     for resource in snapshot_tables_preflight(sf_dir, config, spark):
         table = resource.split(".", 1)[1]
@@ -171,15 +180,28 @@ def start_stream(
     with dynamic partition overwrite, so a replayed micro-batch
     *replaces* its own epoch partition instead of appending duplicates —
     idempotent-producer semantics for files (the Kafka path gets the
-    same from ``enable.idempotence`` + checkpoint replay)."""
+    same from ``enable.idempotence`` + checkpoint replay).
+
+    ``sink_fn(delivery, epoch_id)`` contract: the per-batch tally is
+    observed on ``delivery``, so it comes from the sink's FIRST action
+    over ``delivery``, and that action must read every row (a write, a
+    ``count()``, a full ``collect()``; not a ``limit``/``take``).
+    ``make_kafka_sink``, the default parquet sink and a count-then-write
+    sink all qualify. A sink that runs no action over ``delivery`` gets
+    the tally computed by a separate job."""
     registry = registry or MetricsRegistry()
     streams = config.streams
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
+        # The plan's expressions are built once per query (cached in the
+        # envelope, routing and key builders), so per-batch planning is a
+        # handful of py4j calls; the micro-batch's rows live only in the
+        # sink's one pass (arena, O1), and the tally is observed on it.
+        out, read_tally = observed_tally(_route_and_serialize(batch, streams), streams)
         if exactly_once:
-            out = _route_and_serialize(batch, streams).withColumn("epoch", F.lit(epoch_id))
             (
-                out.select("epoch", "destination", "key", "value", "resource", "op", "lsn")
+                out.withColumn("epoch", F.lit(epoch_id))
+                .select("epoch", "destination", "key", "value", "resource", "op", "lsn")
                 .write.mode("overwrite")
                 # per-write option, not session conf: a session-global
                 # partitionOverwriteMode=dynamic would silently change every
@@ -188,16 +210,7 @@ def start_stream(
                 .partitionBy("epoch", "destination")
                 .parquet(out_dir)
             )
-            if registry is not None:
-                for r in out.groupBy("stream", "op").agg(F.count("*").alias("n")).collect():
-                    registry.add_processed(r["stream"], r["op"], r["n"])
-            return
-        out = _route_and_serialize(batch, streams)
-        if registry is not None:
-            # cache so the post-write tally doesn't recompute the
-            # serialize+route plan (micro-batch lifetime = arena, O1)
-            out = out.persist()
-        try:
+        else:
             # Single partitioned append per micro-batch: one job regardless
             # of destination count (no per-stream driver loop).
             # ``sink_fn`` is the producer-injection seam (the reference
@@ -208,29 +221,10 @@ def start_stream(
             if sink_fn is not None:
                 sink_fn(delivery, epoch_id)
             else:
-                (
-                    delivery
-                    .write.mode("append")
-                    .partitionBy("destination")
-                    .parquet(out_dir)
-                )
-            # A1 tally + M4 lag: tiny aggregates, computed after the sink
-            # write like the reference (metrics reflect *delivered* events).
-            if registry is not None:
-                rows = (
-                    out.groupBy("stream", "op")
-                    .agg(F.count("*").alias("n"), F.max("commit_ts").alias("head"))
-                    .collect()
-                )
-                head = None
-                for r in rows:
-                    registry.add_processed(r["stream"], r["op"], r["n"])
-                    head = max(head or 0, r["head"] or 0)
-                if head:
-                    registry.set_lag(time.time() - head)
-        finally:
-            if registry is not None:
-                out.unpersist()
+                delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
+        # A1 tally + M4 lag, read after the sink returned like the
+        # reference (metrics reflect *delivered* events).
+        registry.record_batch(*read_tally())
 
     return (
         read_feed_stream(spark, sf_dir, max_files_per_trigger)

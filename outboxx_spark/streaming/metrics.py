@@ -9,9 +9,12 @@ plus liveness: no wire activity for 90 s => stalled
 endpoints (`src/observability/http.zig`).
 
 Spark rebuild: a ``StreamingQueryListener`` feeds the same three
-instruments from query progress events; the tally itself is computed
-inside ``foreachBatch`` (one groupBy per micro-batch — the reference's
-per-batch metrics coalescing, `processor.zig:18-28`). Health = listener
+instruments from query progress events; the tally itself is observed
+inside ``foreachBatch`` on the sink's own pass over the batch (one
+``count_if`` per configured (stream, op) plus ``max(commit_ts)``, read
+after the sink returns — ``operators.tally.observed_tally``), the
+reference's per-batch metrics coalescing (`processor.zig:18-28`) with
+no second job. Health = listener
 state, exposed as properties a /healthz HTTP thread can read; rendering
 to Prometheus text format is a straight serialization of the registry.
 """
@@ -41,6 +44,15 @@ class MetricsRegistry:
         with self._lock:
             self.events_processed[(stream, op)] += n
             self.last_activity_ts = time.time()
+
+    def record_batch(self, counts: dict[tuple[str, str], int], head_ts: float | None) -> None:
+        """One delivered batch: its (stream, op) counts (M1) and, when it
+        carried events, the lag behind its newest commit, in unix
+        seconds (M4)."""
+        for (stream, op), n in counts.items():
+            self.add_processed(stream, op, n)
+        if head_ts:
+            self.set_lag(time.time() - head_ts)
 
     def add_produce_errors(self, n: int) -> None:
         with self._lock:
