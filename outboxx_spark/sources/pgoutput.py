@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from outboxx_spark.config import TOAST_PLACEHOLDER
+from outboxx_spark.pyworker import guard_zip_invalidation
 
 PG_EPOCH_UNIX = 946_684_800  # 2000-01-01, converter.zig:19
 
@@ -340,6 +341,7 @@ def decode_stream(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_invalidation()  # for this worker's later tasks
         dec = PgOutputDecoder()  # state spans all batches of the partition
         cols = ("op", "resource", "lsn", "commit_ts", "data", "old")
         for pdf in batches:
@@ -425,6 +427,7 @@ def encode_feed_as_pgoutput(feed: DataFrame) -> DataFrame:
         return b"".join(parts)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_invalidation()  # for this worker's later tasks
         seen: set[int] = set()
         for pdf in batches:
             pdf = pdf[pdf["op"].to_numpy() != "READ"]

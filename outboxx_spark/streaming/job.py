@@ -75,6 +75,12 @@ def kafka_writer_options(
     return opts
 
 
+# serialize_feed writes the envelope into ``value``, which shadows a
+# payload column of that name; the key reads such a payload through this
+# copy, taken before serialization
+_PAYLOAD_VALUE = "_payload_value"
+
+
 def _dynamic_key(data_cols: list[str]) -> F.Column:
     """R3 with per-stream routing_key: the configured column name (a
     *value* in the routed row) selects the payload column. A literal
@@ -87,14 +93,18 @@ def _dynamic_key(data_cols: list[str]) -> F.Column:
 def _key_expr(data_cols: tuple[str, ...]) -> F.Column:
     kv = []
     for c in data_cols:
-        kv += [F.lit(c), F.col(c).cast("string")]
+        kv += [F.lit(c), F.col(_PAYLOAD_VALUE if c == "value" else c).cast("string")]
     return partition_key(F.create_map(*kv)[F.col("routing_key")])
 
 
-def _route_and_serialize(batch: DataFrame, streams: list) -> DataFrame:
-    serialized = serialize_feed(batch, FEED_DATA_COLS)  # once per event (F1)
+def _route_and_serialize(
+    batch: DataFrame, streams: list, data_cols: list[str] = FEED_DATA_COLS
+) -> DataFrame:
+    if "value" in data_cols:
+        batch = batch.withColumn(_PAYLOAD_VALUE, F.col("value"))
+    serialized = serialize_feed(batch, data_cols)  # once per event (F1)
     routed = route_config(serialized, streams)  # fan-out (R1/R2)
-    return routed.withColumn("key", _dynamic_key(FEED_DATA_COLS))  # R3
+    return routed.withColumn("key", _dynamic_key(data_cols))  # R3
 
 
 def snapshot_tables_preflight(
@@ -152,9 +162,7 @@ def run_snapshot_phase(
             spark, sf_dir, table, start_lsn=start_lsn, snapshot_ts=snapshot_ts
         )
         data_cols = [c for c in snap.columns if c not in ("op", "resource", "lsn", "commit_ts")]
-        serialized = serialize_feed(snap, data_cols)
-        routed = route_config(serialized, config.streams)
-        keyed = routed.withColumn("key", _dynamic_key(data_cols))
+        keyed = _route_and_serialize(snap, config.streams, data_cols)
         out = keyed.select("destination", "key", "value", "resource", "op", "lsn")
         out.write.mode("append").partitionBy("destination").parquet(out_dir)
         total += 1

@@ -16,6 +16,7 @@ from pathlib import Path
 
 import pytest
 from py4j.java_gateway import GatewayClient
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
@@ -180,3 +181,41 @@ def test_batch_plan_expressions_are_built_once(spark, feed_dir):
     first = commands(read_feed(spark, feed_dir))
     second = commands(read_feed(spark, feed_dir))
     assert second * 5 <= first, (first, second)
+
+
+def _payload_value_key_mismatches(spark, out_dir: str, destination: str) -> tuple[int, int]:
+    """(rows, rows whose key is not the payload ``value`` cast to string)
+    for one destination of a delivered parquet output."""
+    out = spark.read.parquet(out_dir).where(F.col("destination") == destination)
+    payload = F.from_json("value", "data struct<value: double>")["data"]["value"]
+    row = out.agg(
+        F.count("*").alias("rows"),
+        F.count_if(~F.col("key").eqNullSafe(payload.cast("string"))).alias("bad"),
+    ).first()
+    return row["rows"], row["bad"]
+
+
+def test_value_keyed_stream_keys_on_the_payload(spark, feed_dir, tmp_path):
+    # b_idr is keyed on ``value``, which is also the envelope's column
+    _run(spark, feed_dir, tmp_path)
+    rows, bad = _payload_value_key_mismatches(spark, str(tmp_path / "out"), "obs.b")
+    assert rows > 0
+    assert bad == 0
+
+
+def test_value_keyed_snapshot_keys_on_the_payload(spark, tmp_path):
+    sf = tmp_path / "sf"
+    spark.createDataFrame(
+        [(1, 37.73), (2, -0.5), (3, 1e300)], "id long, value double"
+    ).write.parquet(str(sf / "readings.parquet"))
+    config = validate(
+        PipelineConfig(
+            streams=[make_stream("r", "public.readings", ["read"], "snap.r", "value")]
+        )
+    )
+    out = str(tmp_path / "out")
+    assert job.run_snapshot_phase(spark, str(sf), config, out, start_lsn=0, snapshot_ts=1) == 1
+    rows, bad = _payload_value_key_mismatches(spark, out, "snap.r")
+    assert (rows, bad) == (3, 0)
+    keys = {r["key"] for r in spark.read.parquet(out).collect()}
+    assert keys == {"37.73", "-0.5", "1.0E300"}
