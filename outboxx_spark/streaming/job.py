@@ -196,7 +196,14 @@ def start_stream(
     ``count()``, a full ``collect()``; not a ``limit``/``take``).
     ``make_kafka_sink``, the default parquet sink and a count-then-write
     sink all qualify. A sink that runs no action over ``delivery`` gets
-    the tally computed by a separate job."""
+    the tally computed by a separate job. ``exactly_once`` writes its own
+    epoch-partitioned files, so it takes no ``sink_fn``: passing both
+    raises ``ValueError`` before the query starts."""
+    if exactly_once and sink_fn is not None:
+        raise ValueError(
+            "start_stream: exactly_once=True writes its own epoch-partitioned "
+            "parquet sink and cannot deliver through sink_fn; pass one or the other"
+        )
     registry = registry or MetricsRegistry()
     streams = config.streams
 

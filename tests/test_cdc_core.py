@@ -37,6 +37,23 @@ def test_lsn_text_form(spark):
     assert out == ["0/0", "0/5", "1234567/89ABCDEF"]
 
 
+def test_lsn_text_matches_format_string_rendering(spark):
+    # concat(hex, '/', hex) must give the text the earlier per-row
+    # format_string("%X/%X") gave, null included
+    lsn = F.col("lsn")
+    formatted = F.when(
+        lsn.isNotNull(),
+        F.format_string("%X/%X", F.shiftrightunsigned(lsn, 32), lsn.bitwiseAND(F.lit(0xFFFFFFFF))),
+    )
+    values = [0, 1, 0xFFFFFFFF, 1 << 32, 2**63 - 1, None]
+    df = spark.createDataFrame([(v,) for v in values], "lsn long")
+    out = df.select(lsn_text(lsn).alias("new"), formatted.alias("old")).collect()
+    assert [r["new"] for r in out] == [r["old"] for r in out]
+    assert [r["new"] for r in out] == [
+        "0/0", "0/1", "0/FFFFFFFF", "1/0", "7FFFFFFF/FFFFFFFF", None
+    ]
+
+
 def test_partition_key_stringifies(spark):
     df = spark.createDataFrame(
         [(1, "a"), (-9223372036854775808, "b"), (9223372036854775807, "c")], "k long, x string"

@@ -47,3 +47,17 @@ def test_exactly_once_no_duplicates_across_restart(spark, multi_file_feed, tmp_p
     got_set = {tuple(r) for r in got.select("destination", "lsn").collect()}
     exp_set = {tuple(r) for r in expect.select("destination", "lsn").collect()}
     assert got_set == exp_set
+
+
+def test_exactly_once_rejects_sink_fn(spark, multi_file_feed, tmp_path):
+    # exactly_once writes its own epoch-partitioned files; a sink_fn
+    # would be silently ignored, so the pair is refused up front
+    ckpt = tmp_path / "ckpt"
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="sink_fn"):
+        start_stream(
+            spark, multi_file_feed, default_config(), str(tmp_path / "out"), str(ckpt),
+            exactly_once=True, sink_fn=lambda delivery, epoch_id: None,
+        )
+    assert len(spark.streams.active) == active
+    assert not ckpt.exists()
